@@ -426,8 +426,10 @@ object Bench {
     val skewN = sys.env.getOrElse("SPARK_GRAFT_SKEW_N", "6000000").toLong
     def skewRun(salt: Int, aqe: Boolean): (Long, Double) = {
       // force the shuffled sort-merge path: without this, runtime
-      // broadcast makes the demo vacuous (no shuffle to skew)
+      // broadcast (or joinRects' broadcast hint at salt 0) makes the
+      // demo vacuous (no shuffle to skew)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.optimizer.disableHints", "true")
       spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
       val n = skewN
       val im = spark.range(0, n, 1, cpus * 4)
@@ -444,10 +446,10 @@ object Bench {
         .withColumn("px1m", col("px0m") + 600)
         .withColumn("py1m", col("py0m") + 600)
       val t0 = System.nanoTime()
-      val c = SpatialJoin.joinRects(im, po, 7, broadcastPolys = false,
-        salt = salt).count()
+      val c = SpatialJoin.joinRects(im, po, 7, salt = salt).count()
       val sec = (System.nanoTime() - t0) / 1e9
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.sql.optimizer.disableHints")
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       (c, sec)
     }

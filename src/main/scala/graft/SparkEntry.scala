@@ -211,8 +211,7 @@ object SparkEntry {
         .orderBy("fid")),
 
     "q_spatial_join_salted" -> ((s, dir) =>
-      SpatialJoin.joinRects(imgs(s, dir), polys(s, dir), JoinRes,
-          broadcastPolys = false, salt = 8)
+      SpatialJoin.joinRects(imgs(s, dir), polys(s, dir), JoinRes, salt = 8)
         .select(col("image_id"), col("fid"), overlapArea.as("overlap_area"))
         .orderBy("image_id", "fid")),
 

@@ -73,47 +73,71 @@ object SpatialJoin {
         col("area_sum"))
   }
 
-  /** Rect-layer spatial join. `images` needs (x0m,y0m,x1m,y1m), `polys`
-    * needs (px0m,py0m,px1m,py1m). Returns all pairs with OPEN-interval
-    * rectangle overlap, deduped, with all input columns.
-    *
-    * `salt > 1` spreads each hot cell across `salt` shuffle keys by
-    * hashing `saltKey` (any image-side column with per-row-distinct
-    * values — default the synth key "k"; pass e.g. "image_id" for
-    * other tables). Salting changes only the shuffle distribution,
-    * never the result rows. */
-  def joinRects(images: DataFrame, polys: DataFrame, res: Int = 7,
-                broadcastPolys: Boolean = true, salt: Int = 0,
-                saltKey: String = "k"): DataFrame = {
-    val imgCells = withCoverCells(images, res, "x0m", "y0m", "x1m", "y1m")
-    val polCells0 = withCoverCells(polys, res, "px0m", "py0m", "px1m", "py1m")
+  /** The four mdeg bbox column names of one join side (half-open). */
+  private[ops] final case class Box(x0: String, y0: String, x1: String, y1: String)
+  private[ops] val ImgBox = Box("x0m", "y0m", "x1m", "y1m")
+  private val PolyBox = Box("px0m", "py0m", "px1m", "py1m")
 
-    val overlap =
-      col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-      col("y0m") < col("py1m") && col("py0m") < col("y1m")
-    // unique reporter cell = cell of the intersection's min corner
-    val dedup =
-      cellIx(greatest(col("x0m"), col("px0m")), res) === col("cix") &&
-      cellIy(greatest(col("y0m"), col("py0m")), res) === col("ciy")
-
-    // single packed long key on every path (broadcast builds the
-    // allocation-free LongHashedRelation; SMJ sorts one column)
-    val packed = col("cix") * CellGrid.IxMul + col("ciy")
-    if (salt <= 1) {
-      val polCells = if (broadcastPolys)
-        broadcast(polCells0.withColumn("cell", packed).drop("cix", "ciy"))
-      else polCells0.withColumn("cell", packed).drop("cix", "ciy")
-      imgCells.withColumn("cell", packed)
-        .join(polCells, Seq("cell")).where(overlap && dedup)
-    } else {
-      // salt the (usually skew-prone) image side; replicate polygons
-      val imgS = imgCells.withColumn("cell", packed)
-        .withColumn("salt", pmod(hash(col(saltKey)).cast("long"), lit(salt.toLong)))
-      val polS = polCells0.withColumn("cell", packed).drop("cix", "ciy")
-        .withColumn("salt", explode(sequence(lit(0L), lit(salt.toLong - 1))))
-      imgS.join(polS, Seq("cell", "salt")).where(overlap && dedup)
-    }
+  /** How [[cellJoin]] distributes its right side. */
+  private[ops] sealed trait Spread
+  private[ops] object Spread {
+    case object Broadcast extends Spread
+    case object Plain extends Spread
+    final case class Salted(n: Int) extends Spread
   }
+
+  /** Single packed long cell key: a broadcast build gets the
+    * allocation-free LongHashedRelation, a sort-merge join sorts one
+    * column. */
+  private def cellKey(ix: Column, iy: Column): Column = ix * CellGrid.IxMul + iy
+
+  /** OPEN-interval overlap of two bboxes (shared edges do not match). */
+  private def overlaps(a: Box, b: Box): Column =
+    col(a.x0) < col(b.x1) && col(b.x0) < col(a.x1) &&
+    col(a.y0) < col(b.y1) && col(b.y0) < col(a.y1)
+
+  /** Covering cells of `box` at `res` plus their packed `cell` key. */
+  private def keyedCells(df: DataFrame, box: Box, res: Int): DataFrame =
+    withCoverCells(df, res, box.x0, box.y0, box.x1, box.y1)
+      .withColumn("cell", cellKey(col("cix"), col("ciy")))
+
+  /** The covering-cell join core: both sides covered at `res`,
+    * equi-joined on `cell`, kept on OPEN-interval bbox overlap, and each
+    * pair emitted only in the cell of the intersection's min corner (a
+    * unique reporter cell — no distinct shuffle). `leftKeep` prefilters
+    * the keyed left rows before any exchange. Output: `cell`, the left
+    * columns with (cix, ciy), the right columns (+ `salt` if salted). */
+  private[ops] def cellJoin(left: DataFrame, lb: Box, right: DataFrame,
+                            rb: Box, res: Int, spread: Spread,
+                            leftKeep: Option[Column] = None): DataFrame = {
+    val l = leftKeep.foldLeft(keyedCells(left, lb, res))(_.where(_))
+    val r = keyedCells(right, rb, res).drop("cix", "ciy")
+    val reporter =
+      cellIx(greatest(col(lb.x0), col(rb.x0)), res) === col("cix") &&
+      cellIy(greatest(col(lb.y0), col(rb.y0)), res) === col("ciy")
+    val joined = spread match {
+      case Spread.Broadcast => l.join(broadcast(r), Seq("cell"))
+      case Spread.Plain => l.join(r, Seq("cell"))
+      case Spread.Salted(n) =>
+        // hash the per-row-distinct image key `k` into n salts; the
+        // right side replicates once per salt
+        l.withColumn("salt", pmod(hash(col("k")).cast("long"), lit(n.toLong)))
+          .join(r.withColumn("salt", explode(sequence(lit(0L), lit(n.toLong - 1)))),
+            Seq("cell", "salt"))
+    }
+    joined.where(overlaps(lb, rb) && reporter)
+  }
+
+  /** Rect-layer spatial join. `images` needs (k, x0m,y0m,x1m,y1m),
+    * `polys` needs (px0m,py0m,px1m,py1m). Returns all pairs with
+    * OPEN-interval rectangle overlap, deduped, with all input columns.
+    * The polygon side broadcasts; `salt > 1` instead shuffles, each hot
+    * image cell spread across `salt` keys. Salting changes only the
+    * shuffle distribution, never the result rows. */
+  def joinRects(images: DataFrame, polys: DataFrame, res: Int = 7,
+                salt: Int = 0): DataFrame =
+    cellJoin(images, ImgBox, polys, PolyBox, res,
+      if (salt > 1) Spread.Salted(salt) else Spread.Broadcast)
 
   /** Z-order key column from two cell-coordinate columns — the
     * codegen shift/mask mirror of [[CellGrid.zInterleave]] (no UDF). */
@@ -279,70 +303,53 @@ object SpatialJoin {
       coalesce(sum("ms"), lit(0L)).as("morton_steps"))
   }
 
+  /** Bloom-filter sizing: ~1.2 MB broadcast at 10⁶ cells / 1% fpp. */
+  private val BloomCells = 1L << 20
+  private val BloomFpp = 0.01
+
   /** Shuffled spatial join with a BLOOM-FILTER runtime prefilter — the
     * row-level pruning a 100 TB shuffled join needs when neither side
     * broadcasts: a Bloom filter over the polygon side's covering cells
     * is built distributed (`stat.bloomFilter` tree-reduces sketch
-    * partials; no row collect), broadcast (~1.2 MB at 10⁶ cells /
-    * 1% fpp), and applied to image cell rows BEFORE they enter the
-    * shuffle — images nowhere near any polygon never ship. False
-    * positives only cost shuffled bytes; the exact equi-join + refine
-    * keeps the result IDENTICAL to [[joinRects]] (oracle + spec
-    * asserted). The hand-rolled analog of AQE's runtime row-level
-    * filtering, usable on any Spark version and any plan shape. */
-  def joinRectsBloom(images: DataFrame, polys: DataFrame, res: Int = 7,
-                     expectedCells: Long = 1L << 20,
-                     fpp: Double = 0.01): DataFrame = {
-    val imgCells = withCoverCells(images, res, "x0m", "y0m", "x1m", "y1m")
-    val polCells = withCoverCells(polys, res, "px0m", "py0m", "px1m", "py1m")
-    val packed = col("cix") * CellGrid.IxMul + col("ciy")
-    val overlap =
-      col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-      col("y0m") < col("py1m") && col("py0m") < col("y1m")
-    val dedup =
-      cellIx(greatest(col("x0m"), col("px0m")), res) === col("cix") &&
-      cellIy(greatest(col("y0m"), col("py0m")), res) === col("ciy")
-    val polKeyed = polCells.withColumn("cell", packed).drop("cix", "ciy")
-    val bloom = polKeyed.stat.bloomFilter("cell", expectedCells, fpp)
+    * partials; no row collect), broadcast, and applied to image cell
+    * rows BEFORE they enter the shuffle — images nowhere near any
+    * polygon never ship. False positives only cost shuffled bytes; the
+    * exact equi-join + refine keeps the result IDENTICAL to
+    * [[joinRects]] (oracle + spec asserted). The hand-rolled analog of
+    * AQE's runtime row-level filtering, usable on any Spark version
+    * and any plan shape. */
+  def joinRectsBloom(images: DataFrame, polys: DataFrame,
+                     res: Int = 7): DataFrame = {
+    val bloom = keyedCells(polys, PolyBox, res)
+      .stat.bloomFilter("cell", BloomCells, BloomFpp)
     val bc = images.sparkSession.sparkContext.broadcast(bloom)
     val might = udf((c: Long) => bc.value.mightContainLong(c))
-    imgCells.withColumn("cell", packed)
-      .filter(might(col("cell")))
-      .join(polKeyed, Seq("cell"))
-      .where(overlap && dedup)
+    cellJoin(images, ImgBox, polys, PolyBox, res, Spread.Plain,
+      leftKeep = Some(might(col("cell"))))
   }
 
-  /** Small-image fast path: when every image extent ≤ cellSize(res)
-    * (true at res ≤ 7 for this engine's ≤1.02° footprints), an image's
-    * MIN-CORNER cell alone suffices as the join key if the polygon
-    * side pads its covering by one ring: overlap ⇒ the image's min
-    * corner lies within one cell of the polygon bbox. One row per
-    * image (no explode), each (image, polygon) candidate appears
-    * exactly once (no dedup predicate) — the map side is 2 shifts per
-    * row and the probe is a single broadcast-hash lookup. Requires
-    * caller-guaranteed max image extent; falls back to [[joinRects]]
-    * otherwise. */
-  def joinRectsSmallImages(images: DataFrame, polys: DataFrame, res: Int = 7,
-                           maxImageExtentM: Long = 1024): DataFrame = {
-    require(maxImageExtentM <= CellGrid.cellSize(res),
-      s"image extent exceeds cell size at res $res — use joinRects")
-    // single packed long key -> Spark picks the allocation-free
-    // LongHashedRelation for the broadcast build (a two-column key
-    // would fall back to the generic UnsafeHashedRelation and allocate
-    // per probe row)
+  /** Small-image fast path: an image's MIN-CORNER cell alone suffices
+    * as the join key if the polygon side pads its covering by one
+    * ring, because overlap ⇒ the image's min corner lies within one
+    * cell of the polygon bbox. One row per image (no explode), each
+    * (image, polygon) candidate appears exactly once (no dedup
+    * predicate) — the map side is 2 shifts per row and the probe is a
+    * single broadcast-hash lookup. Precondition, guaranteed by the
+    * caller and not checked: every image extent ≤ cellSize(res) (true
+    * at res ≤ 7 for this engine's ≤1.02° footprints). Larger images
+    * silently miss pairs; use [[joinRects]] for them. */
+  def joinRectsSmallImages(images: DataFrame, polys: DataFrame,
+                           res: Int = 7): DataFrame = {
     val imgCells = images.withColumn("cell",
-      cellIx(col("x0m"), res) * CellGrid.IxMul + cellIy(col("y0m"), res))
+      cellKey(cellIx(col("x0m"), res), cellIy(col("y0m"), res)))
     val polCells = broadcast(polys
       .withColumn("cix", explode(sequence(
         cellIx(col("px0m"), res) - 1, cellIx(col("px1m") - 1, res) + 1)))
       .withColumn("ciy", explode(sequence(
         cellIy(col("py0m"), res) - 1, cellIy(col("py1m") - 1, res) + 1)))
-      .withColumn("cell", col("cix") * CellGrid.IxMul + col("ciy"))
+      .withColumn("cell", cellKey(col("cix"), col("ciy")))
       .drop("cix", "ciy"))
-    val overlap =
-      col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-      col("y0m") < col("py1m") && col("py0m") < col("y1m")
-    imgCells.join(polCells, Seq("cell")).where(overlap)
+    imgCells.join(polCells, Seq("cell")).where(overlaps(ImgBox, PolyBox))
   }
 
   /** Anti-join: images matching NO polygon (reference analog: features
@@ -360,20 +367,9 @@ object SpatialJoin {
     // native Catalyst refine expression: per-task WKT ring memoization
     // instead of a per-row-parsing UDF (graft.expr.RectIntersectsPoly)
     graft.expr.GraftFunctions.register(images.sparkSession)
-    val refine = (a: Column, b: Column, c: Column, d: Column, w: Column) =>
-      call_function("graft_rect_poly", a, b, c, d, w)
-    val imgCells = withCoverCells(images, res, "x0m", "y0m", "x1m", "y1m")
-    val polCells = broadcast(
-      withCoverCells(polys, res, "px0m", "py0m", "px1m", "py1m"))
-    val bboxOverlap =
-      col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-      col("y0m") < col("py1m") && col("py0m") < col("y1m")
-    val dedup =
-      cellIx(greatest(col("x0m"), col("px0m")), res) === col("cix") &&
-      cellIy(greatest(col("y0m"), col("py0m")), res) === col("ciy")
-    imgCells.join(polCells, Seq("cix", "ciy"))
-      .where(bboxOverlap && dedup)
-      .where(refine(col("x0m"), col("y0m"), col("x1m"), col("y1m"), col("geom_wkt")))
+    cellJoin(images, ImgBox, polys, PolyBox, res, Spread.Broadcast)
+      .where(call_function("graft_rect_poly", col("x0m"), col("y0m"),
+        col("x1m"), col("y1m"), col("geom_wkt")))
   }
 
   /** Per-hit intersection GEOMETRY — the reference's `intersections`
@@ -475,19 +471,11 @@ object SpatialJoin {
     val base = images.select(col("k"), (col("x0m") - pad).as("bx0"),
       (col("y0m") - pad).as("by0"), (col("x1m") + pad).as("bx1"),
       (col("y1m") + pad).as("by1"))
-    val packed = col("cix") * CellGrid.IxMul + col("ciy")
-    val a = withCoverCells(base.toDF("ka", "ax0", "ay0", "ax1", "ay1"),
-        res, "ax0", "ay0", "ax1", "ay1")
-      .withColumn("cell", packed)
-    val b = withCoverCells(base.toDF("kb", "bx0", "by0", "bx1", "by1"),
-        res, "bx0", "by0", "bx1", "by1")
-      .withColumn("cell", packed).drop("cix", "ciy")
-    a.join(b, Seq("cell"))
-      .where(col("ka") < col("kb") &&
-        col("ax0") < col("bx1") && col("bx0") < col("ax1") &&
-        col("ay0") < col("by1") && col("by0") < col("ay1") &&
-        cellIx(greatest(col("ax0"), col("bx0")), res) === col("cix") &&
-        cellIy(greatest(col("ay0"), col("by0")), res) === col("ciy"))
+    cellJoin(base.toDF("ka", "ax0", "ay0", "ax1", "ay1"),
+        Box("ax0", "ay0", "ax1", "ay1"),
+        base.toDF("kb", "bx0", "by0", "bx1", "by1"),
+        Box("bx0", "by0", "bx1", "by1"), res, Spread.Plain)
+      .where(col("ka") < col("kb"))
   }
 
   /** Triangle census of the proximity graph via degree-ordered

@@ -208,10 +208,8 @@ object Stats {
            max(col("z._4")).as("vmax"))
 
   def zonalStats(imagesWithBytes: DataFrame, polys: DataFrame, nb: Int,
-                 band: Int = 0, resM: Long = 4L,
-                 broadcastPolys: Boolean = true): DataFrame = {
-    val joined = SpatialJoin.joinRects(imagesWithBytes, polys,
-      broadcastPolys = broadcastPolys)
+                 band: Int = 0, resM: Long = 4L): DataFrame = {
+    val joined = SpatialJoin.joinRects(imagesWithBytes, polys)
     // decodeMemo keyed on k: an image joined to P polygons decodes once
     // per contiguous run of its join rows, not P times (see Codec)
     val zs = udf((img: org.apache.spark.sql.Row,

@@ -219,9 +219,9 @@ object Warp {
     *
     *   1. each destination grid (gid, gx0..gy1 mdeg, north-up, `resM`
     *      mdeg/px) explodes into `tilePx`² pixel tiles;
-    *   2. source images GATHER-join the tiles they overlap through the
-    *      COVERING-CELL EQUI-JOIN (same machinery as SpatialJoin:
-    *      explode res-`cellRes` cells on both sides, equi-join on the
+    *   2. source images GATHER-join the tiles they overlap through
+    *      SpatialJoin's COVERING-CELL JOIN CORE (`cellJoin`: explode
+    *      res-`cellRes` cells on both sides, equi-join on the
     *      packed cell key, dedup via the intersection's min-corner
     *      reporter cell, exact range refine after). NO nested-loop
     *      join anywhere in the plan (asserted by WarpIntoSpec); tiles
@@ -280,26 +280,11 @@ object Warp {
       .withColumn("tgy1", col("gy1") - col("ty") * (tpx * resM))
       .withColumn("tgx1", col("tgx0") + col("tw") * resM)
       .withColumn("tgy0", col("tgy1") - col("th") * resM)
-    // covering-cell equi-join (SpatialJoin's pattern): single packed
-    // long key, min-corner reporter-cell dedup, exact range refine
-    val packed = col("cix") * graft.index.CellGrid.IxMul + col("ciy")
-    val tileCells = {
-      val t = SpatialJoin.withCoverCells(tiles, cellRes,
-        "tgx0", "tgy0", "tgx1", "tgy1")
-        .withColumn("cell", packed).drop("cix", "ciy")
-      if (broadcastTiles) broadcast(t) else t
-    }
-    val imgCells = SpatialJoin.withCoverCells(images, cellRes,
-      "x0m", "y0m", "x1m", "y1m")
-      .withColumn("cell", packed)
-    val overlapP =
-      col("x0m") < col("tgx1") && col("tgx0") < col("x1m") &&
-      col("y0m") < col("tgy1") && col("tgy0") < col("y1m")
-    val dedup =
-      SpatialJoin.cellIx(greatest(col("x0m"), col("tgx0")), cellRes) === col("cix") &&
-      SpatialJoin.cellIy(greatest(col("y0m"), col("tgy0")), cellRes) === col("ciy")
-    val pairs = imgCells.join(tileCells, Seq("cell"))
-      .where(overlapP && dedup && pairPredicate)
+    val pairs = SpatialJoin.cellJoin(images, SpatialJoin.ImgBox, tiles,
+        SpatialJoin.Box("tgx0", "tgy0", "tgx1", "tgy1"), cellRes,
+        if (broadcastTiles) SpatialJoin.Spread.Broadcast
+        else SpatialJoin.Spread.Plain)
+      .where(pairPredicate)
       .drop("cell", "cix", "ciy")
     // struct args (udf arity cap is 10); per-band fragments out, band
     // index = position. decodeMemo: one payload decode per run of

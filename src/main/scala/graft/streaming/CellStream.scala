@@ -74,7 +74,12 @@ object CellStream {
     * new days for one cell emits one flagged row per day, matching
     * the batch ewmaAnomaly row-per-day contract (ADVICE r5: the
     * earlier mapGroupsWithState form folded all days into state but
-    * emitted only the last one). Run in Update mode. */
+    * emitted only the last one). Run in Update mode.
+    *
+    * Duplicate days: a day already applied to the state is ignored.
+    * Within one micro-batch the rows are applied in (day, count)
+    * order, so of several rows for one day the smallest count wins;
+    * across micro-batches the first arrival wins. */
   def ewmaBurstState(stream: Dataset[(Long, Long, Long)])
       : Dataset[(Long, Long, Long, Long)] = {
     import stream.sparkSession.implicits._

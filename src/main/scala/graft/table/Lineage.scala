@@ -82,11 +82,11 @@ object Lineage {
 
   def committedParts(root: String): Set[Int] = commits(root).map(_.part).toSet
 
-  private def appendCommit(root: String, c: Commit): Unit = {
-    val p = logPath(root)
-    // a torn final line (crash mid-append) has no trailing newline —
-    // terminate it first so this commit starts on its own line instead
-    // of concatenating into the garbage
+  /** Append newline-terminated `lines` to an append-only JSON-lines
+    * log. A torn final line (crash mid-append) has no trailing newline
+    * — terminate it first so the new records start on their own line
+    * instead of concatenating into the garbage. */
+  private def appendLines(p: Path, lines: String): Unit = {
     val needsNl = Files.exists(p) && Files.size(p) > 0 && {
       val ch = Files.newByteChannel(p, StandardOpenOption.READ)
       try {
@@ -96,14 +96,18 @@ object Lineage {
         b.get(0) != '\n'.toByte
       } finally ch.close()
     }
+    Files.write(p, ((if (needsNl) "\n" else "") + lines).getBytes,
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+  }
+
+  private def appendCommit(root: String, c: Commit): Unit = {
     val genField = if (c.gen > 0) s""","gen":${c.gen}""" else ""
     val statField = (c.lo, c.hi) match {
       case (Some(l), Some(h)) => s""","lo":$l,"hi":$h"""
       case _                  => ""
     }
-    val line = s"""{"part":${c.part},"rows":${c.rows},"bytes":${c.bytes},"ts":${c.ts}$genField$statField}\n"""
-    Files.write(p, ((if (needsNl) "\n" else "") + line).getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    appendLines(logPath(root),
+      s"""{"part":${c.part},"rows":${c.rows},"bytes":${c.bytes},"ts":${c.ts}$genField$statField}\n""")
   }
 
   private def dirBytes(dir: Path): Long =
@@ -664,18 +668,20 @@ object Lineage {
     * sidecar (append-only history, same torn-line discipline as the
     * commit log) — the "every stage writes row-count/byte metrics to
     * the metadata table" half of the resumability contract. Call
-    * AFTER the action that materialized the observed frames. */
+    * AFTER the action that materialized the observed frames. Stage
+    * names are written into JSON verbatim, so names containing `"` or
+    * `\` are rejected before anything is written. */
   def recordStages(root: String,
                    obs: Seq[org.apache.spark.sql.Observation]): Unit = {
+    obs.foreach(o => require(!o.name.exists(c => c == '"' || c == '\\'),
+      s"stage name has a double quote or backslash: ${o.name}"))
     val ts = System.currentTimeMillis()
     val lines = obs.map { o =>
       val m = o.get
       val bytes = m.getOrElse("bytes", 0L)
-      s"""{"stage":"${o.name}","rows":${m("rows")},"bytes":$bytes,"ts":$ts}"""
+      s"""{"stage":"${o.name}","rows":${m("rows")},"bytes":$bytes,"ts":$ts}\n"""
     }
-    Files.write(stagesPath(root),
-      (lines.mkString("\n") + "\n").getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    appendLines(stagesPath(root), lines.mkString)
   }
 
   private val StageRe =

@@ -193,15 +193,22 @@ object TextOps {
         (col("end_tok") - col("start_tok") + 1).as("span_tokens"),
         col("n_windows"))
 
+  /** md5 of every n-token gram of the [[withTokArr]] column, in order;
+    * empty for docs shorter than n. A `when` guard, not a filter: a size
+    * filter is pushed below the token projection as a second split. */
+  private def gramHashes(n: Int): Column = {
+    val tk = col("__tk")
+    when(size(tk) >= n, transform(sequence(lit(1), size(tk) - (n - 1)),
+      i => md5(concat_ws(" ", slice(tk, i, lit(n))))))
+      .otherwise(array())
+  }
+
   /** Shared core of [[dupSpans]]/[[dupSpanScrub]]: duplicated seed
     * windows (gram corpus-frequency ≥ 2) tagged with their per-doc
     * island number. Columns: doc_id, pos, gh, island. */
   private def dupIslands(docs: DataFrame, L: Int): DataFrame = {
-    val tk = col("__tk")
-    val g = withTokArr(docs).where(size(tk) >= L)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(1), size(tk) - (L - 1)),
-          i => md5(concat_ws(" ", slice(tk, i, lit(L)))))))
+    val g = withTokArr(docs)
+      .select(col("doc_id"), posexplode(gramHashes(L)))
       .toDF("doc_id", "pos", "gh")
     // duplicated gram keys via partial-aggregated count (skew-safe:
     // map-side combine bounds any one gram's reducer input by the map
@@ -237,11 +244,8 @@ object TextOps {
     * argmin is the lexicographic min of (hash, −pos), identical in
     * any SQL engine (min-of-struct over a row frame). */
   def winnow(docs: DataFrame, k: Int = 3, w: Int = 4): DataFrame = {
-    val tk = col("__tk")
-    val g = withTokArr(docs).where(size(tk) >= k)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(1), size(tk) - (k - 1)),
-          i => md5(concat_ws(" ", slice(tk, i, lit(k)))))))
+    val g = withTokArr(docs)
+      .select(col("doc_id"), posexplode(gramHashes(k)))
       .toDF("doc_id", "pos", "gh")
     val fr = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(Window.currentRow, w - 1)

@@ -25,31 +25,61 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def images(n: Long): DataFrame = Synth.imagesRange(spark, n, 4)
   private def polys(m: Long): DataFrame = Synth.polygonsRange(spark, m)
 
+  /** (image_id, fid) rows of a join result, sorted — a multiset, so a
+    * pair emitted twice (broken reporter-cell dedup) fails the match. */
+  private def pairs(df: DataFrame): Seq[(String, Long)] =
+    df.select("image_id", "fid").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+
+  private def bruteRects(im: DataFrame, po: DataFrame): Seq[(String, Long)] =
+    pairs(im.crossJoin(po)
+      .where(col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
+             col("y0m") < col("py1m") && col("py0m") < col("y1m")))
+
   test("joinRects matches brute-force theta join (all strategies)") {
     val im = images(3000).cache()
     val po = polys(40).cache()
-    val brute = im.crossJoin(po)
-      .where(col("x0m") < col("px1m") && col("px0m") < col("x1m") &&
-             col("y0m") < col("py1m") && col("py0m") < col("y1m"))
-      .select("image_id", "fid")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val brute = bruteRects(im, po)
     assert(brute.nonEmpty)
-    for ((bcast, salt) <- Seq((true, 0), (false, 0), (false, 8))) {
-      val got = SpatialJoin.joinRects(im, po, 7, bcast, salt)
-        .select("image_id", "fid")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(got == brute, s"strategy bcast=$bcast salt=$salt")
+    for (salt <- Seq(0, 8))
+      assert(pairs(SpatialJoin.joinRects(im, po, 7, salt)) == brute,
+        s"strategy salt=$salt")
+    // min-corner fast path (image extent ≤ cell size) — identical rows,
+    // each (image, polygon) candidate exactly once (no dedup needed)
+    assert(pairs(SpatialJoin.joinRectsSmallImages(im, po, 7)) == brute,
+      "small-image fast path")
+    // edge of the fast path's precondition: images whose extent is
+    // exactly cellSize(7), placed so the min corner sits one cell
+    // before the polygon's first cell or exactly on a cell boundary
+    val cs = graft.index.CellGrid.cellSize(7)
+    val (bx, by) = (224L, 112L) // (bx + OffX, by + OffY) are cell-aligned
+    val offs = Seq(-cs, -cs + 1, -cs / 2, -1L, 0L)
+    val edgeIm = {
+      import spark.implicits._
+      (for (dx <- offs; dy <- offs) yield (bx + dx, by + dy)).zipWithIndex
+        .map { case ((x, y), i) => (s"edge-$i", i.toLong, x, y, x + cs, y + cs) }
+        .toDF("image_id", "k", "x0m", "y0m", "x1m", "y1m")
     }
-    // min-corner fast path (image extent ≤ cell size) — identical rows
-    val fast = SpatialJoin.joinRectsSmallImages(im, po, 7)
-      .select("image_id", "fid")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(fast == brute, "small-image fast path")
-    // and candidate multiplicity is exactly 1 (no dedup needed)
-    val cnt = SpatialJoin.joinRectsSmallImages(im, po, 7)
-      .groupBy("image_id", "fid").count()
-      .agg(max("count")).collect()(0).getLong(0)
-    assert(cnt == 1L)
+    val edgePo = {
+      import spark.implicits._
+      Seq((0L, bx, by, bx + 10, by + 10),
+          (1L, bx + cs - 5, by - 5, bx + cs + 5, by + 5),
+          (2L, bx - 3, by - cs - 3, bx + 3, by - cs + 3))
+        .toDF("fid", "px0m", "py0m", "px1m", "py1m")
+    }
+    val edge = pairs(SpatialJoin.joinRects(edgeIm, edgePo, 7))
+    assert(edge.nonEmpty && edge == bruteRects(edgeIm, edgePo))
+    assert(pairs(SpatialJoin.joinRectsSmallImages(edgeIm, edgePo, 7)) == edge,
+      "small-image fast path at extent == cellSize")
+  }
+
+  test("joinRects default plan: broadcast hash join on one long key") {
+    val plan = SpatialJoin.joinRects(images(1000), polys(20), 7)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") &&
+      !plan.contains("SortMergeJoin"), plan)
+    assert("""HashedRelationBroadcastMode\(List\(input\[\d+, bigint, (true|false)\]\),"""
+        .r.findFirstIn(plan).isDefined, plan)
   }
 
   test("headline join+tile plan shape: no shuffle, broadcast-only exchange") {
@@ -87,9 +117,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val polyDf = spark.createDataFrame(pdf)
       .toDF("fid", "geom_wkt", "px0m", "py0m", "px1m", "py1m")
-    val got = SpatialJoin.joinPolygons(im, polyDf, 7)
-      .select("image_id", "fid")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val got = pairs(SpatialJoin.joinPolygons(im, polyDf, 7))
     // JTS oracle
     val rows = im.select("image_id", "x0m", "y0m", "x1m", "y1m").collect()
     val expect = (for {
@@ -107,7 +135,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         new Coordinate(r.getLong(1) / 1000.0, r.getLong(4) / 1000.0),
         new Coordinate(r.getLong(1) / 1000.0, r.getLong(2) / 1000.0)))
       if rect.intersects(poly) && !rect.touches(poly)
-    } yield (r.getString(0), fid)).toSet
+    } yield (r.getString(0), fid)).toSeq.sorted
     assert(got == expect)
   }
 
@@ -562,13 +590,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("joinRectsBloom: identical rows to joinRects, real pre-shuffle pruning") {
     val im = images(5000).cache()
     val po = polys(20).cache()
-    val want = SpatialJoin.joinRects(im, po, 7)
-      .select("image_id", "fid").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    val got = SpatialJoin.joinRectsBloom(im, po, 7)
-      .select("image_id", "fid").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == want)
+    val want = pairs(SpatialJoin.joinRects(im, po, 7))
+    assert(pairs(SpatialJoin.joinRectsBloom(im, po, 7)) == want)
     assert(want.nonEmpty)
     // effectiveness: the bloom drops image cell rows before the
     // shuffle — survivors must be well under the full cover set
@@ -636,6 +659,32 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // append-only history: a second run adds three more lines
     Lineage.recordStages(root, Seq(o1, o2, o3))
     assert(Lineage.stageMetrics(spark, root).count() == 6)
+  }
+
+  private def observedRange(name: String): org.apache.spark.sql.Observation = {
+    val (df, o) = Lineage.observed(spark.range(0, 10).toDF("k"), name)
+    df.collect()
+    o
+  }
+
+  test("stage metrics: a torn sidecar line does not swallow the next record") {
+    val root = Files.createTempDirectory("graft-stages-torn").toString
+    // crash mid-append: a record cut off without its newline
+    Files.write(Lineage.stagesPath(root), """{"stage":"crop","rows":""".getBytes)
+    Lineage.recordStages(root, Seq(observedRange("scan")))
+    val m = Lineage.stageMetrics(spark, root).select("stage", "rows")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(m == Seq("scan" -> 10L))
+  }
+
+  test("stage metrics: a stage name with a quote is rejected, nothing written") {
+    val root = Files.createTempDirectory("graft-stages-quote").toString
+    val ok = observedRange("scan")
+    intercept[IllegalArgumentException](
+      Lineage.recordStages(root, Seq(ok, observedRange("say \"hi\""))))
+    assert(!Files.exists(Lineage.stagesPath(root)))
+    Lineage.recordStages(root, Seq(ok))
+    assert(Lineage.stageMetrics(spark, root).count() == 1)
   }
 
   test("cellPyramid: rollup conserves fine-level totals and parent arithmetic") {

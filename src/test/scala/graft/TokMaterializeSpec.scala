@@ -46,8 +46,30 @@ class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def toks: Column = split(col("text"), " ")
 
-  private def rows(df: DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
+  /** Output rows as a multiset (sorted), so a change in row
+    * multiplicity fails the comparison. */
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  // the corpus behind a real file scan: over the in-memory relation the
+  // optimizer folds the token projection into the data, hiding the plan
+  lazy val scanned: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tokmat").toString
+    corpus.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Each scan of the corpus computes `split(text)` exactly once: the
+    * materialized token column must not be re-inlined into the lambdas
+    * (CollapseProject does that under collapseProjectAlwaysInline). */
+  private def assertOneSplitPerScan(df: DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    val plan = df.queryExecution.optimizedPlan
+    val splits = plan.flatMap(_.expressions.flatMap(_.collect {
+      case s: StringSplit => s
+    })).size
+    assert(splits == plan.collectLeaves().size, plan.treeString)
+  }
 
   test("ngramCounts == un-materialized expression form") {
     val n = 2
@@ -60,6 +82,7 @@ class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .groupBy("gram").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("gram")).limit(50)
     assert(rows(TextOps.ngramCounts(corpus, 2, 50)) === rows(ref))
+    assertOneSplitPerScan(TextOps.ngramCounts(scanned, 2, 50))
   }
 
   test("winnow == un-materialized expression form") {
@@ -80,6 +103,7 @@ class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("m.gh").as("gh"))
       .distinct()
     assert(rows(TextOps.winnow(corpus, 3, 4)) === rows(ref))
+    assertOneSplitPerScan(TextOps.winnow(scanned, 3, 4))
   }
 
   test("dupSpans == un-materialized expression form") {
@@ -111,6 +135,7 @@ class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("n_windows"))
     assert(rows(TextOps.dupSpans(corpus, 4)) === rows(ref))
     assert(TextOps.dupSpans(corpus, 4).count() > 0) // fixture really dups
+    assertOneSplitPerScan(TextOps.dupSpans(scanned, 4))
   }
 
   test("shingle-set consumers == un-materialized expression form") {
@@ -131,6 +156,7 @@ class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .where(col("jac") >= 0.01)
       .select(col("id_a"), col("id_b"), col("n_inter"), col("n_union"))
     assert(rows(TextOps.jaccardPairs(corpus, 0.01)) === rows(ref))
+    assertOneSplitPerScan(TextOps.jaccardPairs(scanned, 0.01))
   }
 
   test("repetitionStats == un-materialized expression form") {
@@ -155,6 +181,7 @@ class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
       size(g3).cast("long").as("n_3grams"),
       maxCount(g3).as("max_3gram"))
     assert(rows(TextOps.repetitionStats(corpus)) === rows(ref))
+    assertOneSplitPerScan(TextOps.repetitionStats(scanned))
   }
 
   test("pmiBigrams and lmCoverage == un-materialized expression forms") {
@@ -183,6 +210,7 @@ class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy(col("pmi_scaled").desc, col("gram"))
       .limit(40)
     assert(rows(TextOps.pmiBigrams(corpus, 2, 40)) === rows(refPmi))
+    assertOneSplitPerScan(TextOps.pmiBigrams(scanned, 2, 40))
 
     val grams2 = when(size(toks) >= 2,
       transform(sequence(lit(1), size(toks) - 1),
@@ -199,5 +227,6 @@ class TokMaterializeSpec extends AnyFunSuite with BeforeAndAfterAll {
         graft.ops.Tiling.idiv(col("n_attested") * 1048576L,
           col("n_bigrams")))
     assert(rows(TextOps.lmCoverage(corpus, 2L)) === rows(refCov))
+    assertOneSplitPerScan(TextOps.lmCoverage(scanned, 2L))
   }
 }
